@@ -4,6 +4,7 @@ Both modes must return identical rows with truncated lineage; the
 toggle only changes fault tolerance (round-16 verdict task 7)."""
 
 import os
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -47,6 +48,30 @@ def test_reliable_barrier_checkpoints_to_dir(spark, monkeypatch, tmp_path):
     ]
     assert found, "no checkpoint part files written"
     assert "LogicalRDD" in out._jdf.queryExecution().logical().toString()
+
+
+def test_reliable_barrier_warns_when_context_pins_another_dir(
+    spark, monkeypatch, tmp_path
+):
+    """A context keeps the checkpoint dir it pinned first; an env dir
+    that disagrees is ignored loudly, one that agrees silently."""
+    pinned = tmp_path / "pinned"
+    spark.sparkContext.setCheckpointDir(str(pinned))
+    monkeypatch.setenv(BARRIER_MODE_ENV, "reliable")
+    monkeypatch.setenv(CHECKPOINT_DIR_ENV, str(pinned) + "/")
+    df = _frame(spark)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        barrier(df)
+    other = tmp_path / "other"
+    monkeypatch.setenv(CHECKPOINT_DIR_ENV, str(other))
+    with pytest.warns(UserWarning, match=CHECKPOINT_DIR_ENV):
+        out = barrier(df)
+    assert out.count() == 100
+    assert not other.exists()
+    assert any(
+        f.startswith("part-") for _r, _d, files in os.walk(pinned) for f in files
+    )
 
 
 def test_unknown_mode_raises(spark, monkeypatch):

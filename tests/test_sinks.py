@@ -1,6 +1,9 @@
 """S11/S12/S13 serving-sink generators (pure-SQL parts are unit
 tested; JDBC execution is deploy-time)."""
 
+import os
+
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from traits_data_spark.sinks.jdbc import (
@@ -8,6 +11,7 @@ from traits_data_spark.sinks.jdbc import (
     distinct_dims,
     upsert_from_staging_sql,
 )
+from traits_data_spark.sinks.parquet import write_partitioned_parquet
 
 
 def test_ddl_from_schema():
@@ -158,3 +162,39 @@ def test_write_jsonl_shards_roundtrip(spark, tmp_path):
     import glob
     files = glob.glob(f"{out}/split=train/*.json.gz")
     assert files and len(files) >= 2  # 10 records / max 5 per file
+
+
+def test_write_partitioned_parquet_replaces_only_present_partitions(
+    spark, tmp_path
+):
+    """S9 dynamic overwrite: a write replaces the partitions present in
+    the frame and leaves every other partition's files as they were;
+    each written partition lands as one file although its rows come
+    from several tasks."""
+    path = str(tmp_path / "t")
+
+    def files(part):
+        d = os.path.join(path, f"part={part}")
+        return {
+            f: os.path.getsize(os.path.join(d, f))
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        }
+
+    first = spark.range(60).select(
+        F.col("id").alias("k"), (F.col("id") % 3).cast("string").alias("part")
+    ).repartition(4)
+    write_partitioned_parquet(first, path, ["part"])
+    before = {p: files(p) for p in "012"}
+    assert all(len(f) == 1 for f in before.values())
+
+    write_partitioned_parquet(
+        spark.createDataFrame([(100, "0"), (101, "0")], "k LONG, part STRING"),
+        path,
+        ["part"],
+    )
+    got = spark.read.parquet(path)
+    assert sorted(r["k"] for r in got.filter("part = 0").collect()) == [100, 101]
+    assert got.count() == 42
+    assert files("1") == before["1"] and files("2") == before["2"]
+    assert len(files("0")) == 1 and files("0") != before["0"]

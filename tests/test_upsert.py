@@ -1,6 +1,8 @@
 """S10/S11/J13: keyed MERGE semantics, partition-scoped parquet
 upsert, incremental anti-join."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,6 +11,10 @@ from traits_data_spark.sinks.upsert import (
     merge_upsert,
     upsert_parquet_partition,
 )
+
+
+def _data_files(d):
+    return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
 
 
 def test_merge_updates_win_and_new_rows_append(spark):
@@ -48,6 +54,61 @@ def test_upsert_parquet_partition_roundtrip(spark, tmp_path):
     upsert_parquet_partition(delta, path, keys=["k"], partition_by=["part"])
     got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
+    # every rewritten partition lands as one file, not one per task
+    for part in ("p1", "p2"):
+        assert len(_data_files(os.path.join(path, f"part={part}"))) == 1
+
+
+def test_upsert_into_null_partition_keeps_its_rows(spark, tmp_path):
+    """The NULL partition (``__HIVE_DEFAULT_PARTITION__``) is read back,
+    merged and kept like any other: an update there keeps the existing
+    rows, and the emptied-partition step never drops it while it still
+    holds rows."""
+    path = str(tmp_path / "t")
+    null_dir = os.path.join(path, "part=__HIVE_DEFAULT_PARTITION__")
+    schema = "k INT, part STRING, v STRING"
+    first = spark.createDataFrame(
+        [(1, None, "a"), (2, None, "b"), (3, "p1", "c")], schema
+    )
+    upsert_parquet_partition(first, path, keys=["k"], partition_by=["part"])
+
+    def table():
+        return {
+            r["k"]: (r["part"], r["v"])
+            for r in spark.read.parquet(path).collect()
+        }
+
+    upsert_parquet_partition(
+        spark.createDataFrame([(4, None, "d")], schema),
+        path, keys=["k"], partition_by=["part"],
+    )
+    assert table() == {
+        1: (None, "a"), 2: (None, "b"), 3: ("p1", "c"), 4: (None, "d")
+    }
+    # update and retract inside the NULL partition in one batch
+    upsert_parquet_partition(
+        spark.createDataFrame([(2, None, "B")], schema),
+        path, keys=["k"], partition_by=["part"],
+        deletes=spark.createDataFrame([(1,)], ["k"]),
+    )
+    assert table() == {2: (None, "B"), 3: ("p1", "c"), 4: (None, "d")}
+    assert os.path.isdir(null_dir)
+    # a retraction alone that leaves NULL rows behind keeps the partition
+    upsert_parquet_partition(
+        spark.createDataFrame([], schema),
+        path, keys=["k"], partition_by=["part"],
+        deletes=spark.createDataFrame([(4,)], ["k"]),
+    )
+    assert table() == {2: (None, "B"), 3: ("p1", "c")}
+    assert os.path.isdir(null_dir)
+    # retracting its last row removes the partition directory
+    upsert_parquet_partition(
+        spark.createDataFrame([], schema),
+        path, keys=["k"], partition_by=["part"],
+        deletes=spark.createDataFrame([(2,)], ["k"]),
+    )
+    assert table() == {3: ("p1", "c")}
+    assert not os.path.exists(null_dir)
 
 
 def test_merge_delete_retracts_and_wins_over_update(spark):
@@ -83,8 +144,6 @@ def test_upsert_parquet_delete_roundtrip(spark, tmp_path):
     )
     got = {r["k"]: (r["part"], r["v"]) for r in spark.read.parquet(path).collect()}
     assert got == {1: ("p1", "a"), 4: ("p1", "d"), 5: ("p3", "e")}
-    import os
-
     assert not os.path.exists(os.path.join(path, "part=p2"))
     assert os.path.exists(os.path.join(path, "part=p3"))
     # idempotent: re-applying the same retraction is a no-op

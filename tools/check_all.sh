@@ -12,6 +12,9 @@ python tools/check_counts.py
 echo "== pytest =="
 python -m pytest tests/ -q
 
+echo "== benchmark smoke (tiny sizes) =="
+python -m pytest perfbench/test_smoke.py -q
+
 echo "== oracle gate ($SF) =="
 python tools/oracle_check.py "$SF"
 

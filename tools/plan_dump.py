@@ -2,7 +2,9 @@
 
 Usage: python tools/plan_dump.py <tag> <suffix> <query> [query ...]
 Writes plans/<tag>/<query>_<suffix>.txt for each query.
-Planning only — nothing is executed.
+The dumped plans are not executed, but building a query is eager (see
+``catalog/registry.py``): a query with a barrier or driver collect in
+its function runs those jobs while it is built.
 """
 
 from __future__ import annotations

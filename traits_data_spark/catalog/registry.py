@@ -1,7 +1,13 @@
 """The driver-facing registry: ``QUERIES`` (ordering contract — the
 driver attests the FIRST 50 entries) and ``oracle_sqls``. Assembled
 from the per-family modules; the dict text is the single source of
-truth for window order."""
+truth for window order.
+
+Construction is eager: calling a ``QUERIES`` entry builds the plan,
+and a query with an eager barrier or a driver collect inside its
+function (``q_dsir_*`` and every barrier-bearing chain) runs Spark
+jobs then, before the returned frame is executed. Time spent in the
+call is build time, not execute time."""
 
 from __future__ import annotations
 

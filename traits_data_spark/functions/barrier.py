@@ -16,7 +16,10 @@ runs set ``SPARK_GRAFT_BARRIER=reliable``: barriers then use
 ``DataFrame.checkpoint()`` against the application's checkpoint
 directory (``SPARK_GRAFT_CHECKPOINT_DIR`` or a pre-set
 ``setCheckpointDir``), which survives executor loss at the cost of one
-write+read through the checkpoint filesystem per barrier. Both modes
+write+read through the checkpoint filesystem per barrier. A context
+pins one checkpoint directory for its lifetime, so when it already has
+one that differs from ``SPARK_GRAFT_CHECKPOINT_DIR`` the pinned one is
+used and a warning names both. Both modes
 are eager and semantically identical — same rows, same downstream
 plans — so the toggle never changes results, only fault tolerance.
 """
@@ -24,7 +27,9 @@ plans — so the toggle never changes results, only fault tolerance.
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 BARRIER_MODE_ENV = "SPARK_GRAFT_BARRIER"
@@ -38,13 +43,15 @@ def barrier(df: DataFrame) -> DataFrame:
     (executor-local blocks; fastest, not failure-tolerant).
     ``SPARK_GRAFT_BARRIER=reliable`` → ``checkpoint()`` to the
     checkpoint directory (``SPARK_GRAFT_CHECKPOINT_DIR`` is consulted
-    when the context has none set), surviving executor loss.
+    when the context has none set, and a warning is issued when the
+    context has a different one), surviving executor loss.
     """
     mode = os.environ.get(BARRIER_MODE_ENV, "local")
     if mode == "reliable":
         sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            ckdir = os.environ.get(CHECKPOINT_DIR_ENV)
+        ckdir = os.environ.get(CHECKPOINT_DIR_ENV)
+        pinned = sc.getCheckpointDir()
+        if pinned is None:
             if not ckdir:
                 raise RuntimeError(
                     f"{BARRIER_MODE_ENV}=reliable needs a checkpoint "
@@ -52,6 +59,12 @@ def barrier(df: DataFrame) -> DataFrame:
                     "sparkContext.setCheckpointDir() first"
                 )
             sc.setCheckpointDir(ckdir)
+        elif ckdir and not _pinned_under(sc, pinned, ckdir):
+            warnings.warn(
+                f"{CHECKPOINT_DIR_ENV}={ckdir!r} is ignored: the Spark "
+                f"context already checkpoints to {pinned!r}",
+                stacklevel=2,
+            )
         return df.checkpoint(eager=True)
     if mode not in ("local", ""):
         raise RuntimeError(
@@ -59,3 +72,13 @@ def barrier(df: DataFrame) -> DataFrame:
             "'reliable')"
         )
     return df.localCheckpoint()
+
+
+def _pinned_under(sc: SparkContext, pinned: str, ckdir: str) -> bool:
+    """Whether the context's pinned checkpoint dir was set from
+    ``ckdir``: ``setCheckpointDir(d)`` pins a fresh qualified
+    subdirectory ``<d>/<uuid>``."""
+    path = sc._jvm.org.apache.hadoop.fs.Path
+    want = path(ckdir)
+    fs = want.getFileSystem(sc._jsc.hadoopConfiguration())
+    return fs.makeQualified(want).toString() == path(pinned).getParent().toString()

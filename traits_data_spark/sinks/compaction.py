@@ -14,6 +14,12 @@ fixes, in preference order:
 
 Both derive the partition count from measured bytes, never row
 counts — row width varies 100× across tables.
+
+Partitioned writes through ``sinks.parquet.write_partitioned_parquet``
+(the silver sink and the partition upsert) cluster at write time:
+AQE's rebalance on the partition columns gives each partition one
+file, or advisory-sized files when it is large, with no explicit file
+count. Fix 2 remains for tables fragmented by other writers.
 """
 
 from __future__ import annotations

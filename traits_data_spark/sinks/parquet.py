@@ -20,9 +20,19 @@ def write_partitioned_parquet(
     mode: str = "overwrite",
     compression: str = "snappy",
 ) -> None:
+    """Write ``df`` as hive-partitioned Parquet; with the default
+    ``overwrite`` mode only the partitions present in ``df`` are
+    replaced (dynamic partition overwrite).
+
+    With ``partition_by`` non-empty, rows are first clustered on the
+    partition columns with AQE's rebalance, so each partition lands as
+    one file, or as advisory-sized files when it is large, rather than
+    one small file per upstream task."""
     spark = df.sparkSession
     # Dynamic overwrite: only partitions present in df are replaced.
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    if partition_by:
+        df = df.hint("rebalance", *partition_by)
     (
         df.write.mode(mode)
         .option("compression", compression)

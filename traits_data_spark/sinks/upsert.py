@@ -10,17 +10,26 @@ schemas with ``unionByName(allowMissingColumns=True)``, keep the newest
 row per key with a deterministic window, dynamic-overwrite the touched
 partitions. (On a Delta/Iceberg table this whole function is
 ``MERGE INTO``; we keep the dependency-free formulation.)
+
+At small batch sizes an upsert's cost is Spark's fixed per-job cost,
+so the partition upsert runs each step once: one driver collect of
+the touched partition tuples, one merge (persisted, read by both the
+emptied-partition check and the write), one write. Touched partitions
+are matched null-safely, so the NULL partition upserts like any other.
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from traits_data_spark.operators.windows import dedup_keep_best
+from traits_data_spark.sinks.parquet import write_partitioned_parquet
 
 _SRC_FLAG = "__is_update"
 
@@ -73,6 +82,34 @@ def _partition_dir_value(v: object) -> str:
     )
 
 
+def _partition_subdir(partition_by: Sequence[str], values: tuple) -> str:
+    """The ``col=value/...`` directory Spark writes one partition to."""
+    return "/".join(
+        f"{c}={_partition_dir_value(v)}" for c, v in zip(partition_by, values)
+    )
+
+
+def _touched_predicate(
+    partition_by: Sequence[str], touched: set[tuple]
+) -> Column:
+    """Static filter selecting the touched partitions: an OR over the
+    touched tuples of null-safe equalities. It references partition
+    columns only, so the file scan prunes on it, and ``<=>`` matches
+    the NULL (``__HIVE_DEFAULT_PARTITION__``) partition, which an
+    equi-join on partition values never does."""
+    return reduce(
+        operator.or_,
+        (
+            reduce(
+                operator.and_,
+                (F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(partition_by, t)),
+            )
+            for t in touched
+        ),
+        F.lit(False),
+    )
+
+
 def upsert_parquet_partition(
     updates: DataFrame,
     path: str,
@@ -84,8 +121,15 @@ def upsert_parquet_partition(
 
     Only partitions present in ``updates`` — plus, when ``deletes`` is
     given, partitions holding a retracted key — are read back and
-    rewritten (semi-join pushdown on partition values), so cost scales
-    with the delta, not the table.
+    rewritten, so cost scales with the delta, not the table.
+
+    Cost: one driver collect of the distinct touched partition tuples
+    (from the updates plus the target rows matching ``deletes``); one
+    merge over those partitions' existing rows, read through a static
+    null-safe partition predicate and persisted; one collect of the
+    partitions the merge left non-empty, which materialises it; one
+    write of the persisted merge through ``write_partitioned_parquet``.
+    A NULL partition value matches like any other value.
 
     ``deletes`` mirrors the reference's stale-file delete (an upstream
     re-fetch answering "No statistical data" retracts the key —
@@ -98,42 +142,40 @@ def upsert_parquet_partition(
     delete_object), bounded by the touched-partition count.
     """
     spark = updates.sparkSession
-    existing = None
-    touched = updates.select(*partition_by).distinct()
     try:
         target = spark.read.parquet(path)
-        if deletes is not None:
-            # Partitions holding a retracted key are touched too, even
-            # when no update lands there.
-            del_parts = (
-                target.join(
-                    F.broadcast(deletes.select(*keys).distinct()),
-                    list(keys),
-                    "left_semi",
-                )
-                .select(*partition_by)
-                .distinct()
-            )
-            touched = touched.union(del_parts).distinct()
-        # Restrict to touched partitions: semi-join on partition values.
-        existing = target.join(
-            F.broadcast(touched), list(partition_by), "left_semi"
-        )
     except AnalysisException:
-        pass  # first write
-    merged = merge_upsert(existing, updates, keys, deletes=deletes)
+        target = None  # first write
+    touched_parts = updates.select(*partition_by)
+    if target is not None and deletes is not None:
+        # Partitions holding a retracted key are touched too, even
+        # when no update lands there.
+        touched_parts = touched_parts.unionByName(
+            target.join(
+                F.broadcast(deletes.select(*keys).distinct()),
+                list(keys),
+                "left_semi",
+            ).select(*partition_by)
+        )
+    touched = {tuple(r) for r in touched_parts.distinct().collect()}
+    existing = None
+    if target is not None:
+        existing = target.filter(_touched_predicate(partition_by, touched))
+    merged = merge_upsert(existing, updates, keys, deletes=deletes).persist()
+    try:
+        # Read (and so materialised) BEFORE the overwrite: the plan
+        # reads the files the write is about to replace.
+        live = {
+            _partition_subdir(partition_by, r)
+            for r in merged.select(*partition_by).distinct().collect()
+        }
+        write_partitioned_parquet(merged, path, partition_by)
+    finally:
+        merged.unpersist()
     # Fully-emptied partitions: touched but absent from the rewrite.
-    # Computed (collected) BEFORE the overwrite — the plan reads the
-    # files the write is about to replace.
-    emptied = []
-    if deletes is not None and existing is not None:
-        emptied = touched.join(
-            merged.select(*partition_by).distinct(),
-            list(partition_by),
-            "left_anti",
-        ).collect()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    merged.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
+    # Compared as directory names, which do not depend on whether the
+    # updates and the table agree on a partition column's type.
+    emptied = {_partition_subdir(partition_by, t) for t in touched} - live
     if not emptied:
         return
     sc = spark.sparkContext
@@ -141,10 +183,7 @@ def upsert_parquet_partition(
     hconf = sc._jsc.hadoopConfiguration()
     root = jvm.org.apache.hadoop.fs.Path(path)
     fs = root.getFileSystem(hconf)
-    for row in emptied:
-        sub = "/".join(
-            f"{col}={_partition_dir_value(row[col])}" for col in partition_by
-        )
+    for sub in emptied:
         p = jvm.org.apache.hadoop.fs.Path(path + "/" + sub)
         if fs.exists(p):
             fs.delete(p, True)
